@@ -69,12 +69,6 @@ def rounded_sum(col: str | Column, scale: int = 2) -> Column:
     return F.round(F.sum(c.cast(DECIMAL_SUM_TYPE)), scale).cast("double")
 
 
-def exact_avg(col: str | Column) -> Column:
-    """Order-independent mean: exact decimal sum / count, in doubles."""
-    c = F.col(col) if isinstance(col, str) else col
-    return exact_sum(c) / F.count(c)
-
-
 # ---------------------------------------------------------------------------
 # Incremental aggregate maintenance (partial-aggregate algebra)
 # ---------------------------------------------------------------------------

@@ -22,8 +22,13 @@ Stage map (reference citations):
 - ``shape_json_output``  — script/helper.py:99-186 (subTypes map,
   distribution price projection, renames/drops, changelog metadata,
   flat->nested struct schema)
-- ``consume_batch``      — the 4-slice country/distribution loop with
-  UNION ALL accumulation (script/main.py:300-368)
+- ``run_job``            — the nightly job (script/main.py:300-416):
+  stage 0 staged once, the 4-slice country/distribution chains, the
+  gzip JSON/CSV and month-partitioned parquet sinks. The CLI
+  (``tools/run_consume_batch.py``) and the ``pipeline_consume_batch_e2e``
+  query both run it.
+- ``consume_batch``      — the same prep and slice chains as one lazy,
+  sink-free UNION ALL (script/main.py:300-368), for tests and probes
 
 Semantics preserved on purpose (SURVEY.md §4): the visibility join is
 multiplicity-preserving INNER (not semi); stale-id elimination is
@@ -34,7 +39,7 @@ dropped (inner as-of join); ``fraudLevelId <= 0`` drops null-fraud rows.
 
 from __future__ import annotations
 
-import itertools
+import hashlib
 from dataclasses import dataclass
 from datetime import date, timedelta
 
@@ -481,230 +486,167 @@ def shape_json_output(
     return nest_columns(out, sep="_")
 
 
-_STAGING_SEQ = itertools.count()
-_MANAGED_DIRS: list[str] = []
-_ATEXIT_REGISTERED = False
+def stage_prep(
+    tables: dict[str, DataFrame], dates: JobDates, work_dir: str
+) -> tuple[DataFrame, dict[str, DataFrame], dict[str, DataFrame]]:
+    """The job's three slice-independent prep jobs, run CONCURRENTLY
+    from one driver pool (§2.6 "overlap independent jobs"; measured
+    3.2 s + ~1 s + 1.5 s back-to-back at sf0.1, most of which overlaps):
 
+    - stage 0 (filter + merge_delete, reference C1: computed once for
+      all slices) written to the parquet table
+      ``<work_dir>/_stage0_staging`` and scanned back, so every slice
+      chain gets a columnar scan with pruning;
+    - the texts enrichment staged BUCKETED and sorted by ``id``
+      (``operators.partitioning.stage_bucketed_by_key``) under
+      ``<work_dir>/_texts_bucketed``, so past the broadcast threshold
+      no slice's texts join exchanges or sorts the texts side
+      (plans/r14/consume_texts_join_{before,after}.txt);
+    - the :func:`prepare_enrich_dims` frames, each eagerly
+      ``localCheckpoint``ed, so the four concurrent slice chains share
+      one visibility filter, fraud argmax and counter summary instead
+      of each re-running those shuffles (§2.4).
 
-def _cleanup_managed_staging() -> None:
-    """Remove every managed stage-0 dir this process still holds —
-    runs at interpreter exit and at the start of each new managed
-    call."""
-    import shutil
+    Returns the staged stage-0 frame, ``tables`` with its texts
+    replaced by the bucketed read-back, and the checkpointed dims. The
+    dims' blocks are RDD-level (``DataFrame.unpersist`` cannot release
+    them) and stay pinned until the caller releases them."""
+    from concurrent.futures import ThreadPoolExecutor
 
-    while _MANAGED_DIRS:
-        shutil.rmtree(_MANAGED_DIRS.pop(), ignore_errors=True)
+    from ..operators.partitioning import stage_bucketed_by_key
 
+    spark = tables["changelog"].sparkSession
+    merged = merge_delete(filter_changelog(tables["changelog"]), dates.first_day_past)
+    stage0_path = f"{work_dir}/_stage0_staging"
+    texts_path = f"{work_dir}/_texts_bucketed"
+    # the bucketing spec lives only in the catalog: one table name per
+    # staging path, so jobs staging into different dirs never collide
+    texts_table = "consume_texts_" + hashlib.sha1(texts_path.encode()).hexdigest()[:12]
 
-def _managed_staging_dir() -> str:
-    """A fresh per-call stage-0 staging path under the system tmp dir:
-    pid + monotone counter, so concurrent frames from repeated calls in
-    one process never overwrite each other's still-referenced files.
+    def stage0() -> DataFrame:
+        merged.write.mode("overwrite").parquet(stage0_path)
+        return spark.read.parquet(stage0_path)
 
-    Lifecycle (r9 verdict ask #7 / ADVICE — the previous version never
-    deleted these, so a long-lived process leaked one full stage-0
-    parquet copy per default-mode call): the PREVIOUS call's managed
-    dir is removed at the start of the next call — by then the prior
-    returned DataFrame has been consumed in every sane single-frame
-    flow — and an atexit hook sweeps whatever remains, so a process
-    holds at most ONE managed stage-0 copy at a time. A caller that
-    needs several frames alive simultaneously passes ``stage0_staging``
-    explicitly and owns the lifecycle — the registered e2e query and
-    the CLI both do."""
-    global _ATEXIT_REGISTERED
-    import atexit
-    import os
-    import tempfile
-
-    if not _ATEXIT_REGISTERED:
-        atexit.register(_cleanup_managed_staging)
-        _ATEXIT_REGISTERED = True
-    _cleanup_managed_staging()
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_stage0_{os.getpid()}_{next(_STAGING_SEQ)}"
+    raw_dims = prepare_enrich_dims(
+        tables["visibility"], tables["fraud"], tables["contacts"], tables["visits"], dates
     )
-    _MANAGED_DIRS.append(path)
-    return path
+    with ThreadPoolExecutor(max_workers=2 + len(raw_dims)) as pool:
+        f_stage0 = pool.submit(stage0)
+        f_texts = pool.submit(
+            stage_bucketed_by_key, tables["texts"], "id", texts_path, texts_table
+        )
+        f_dims = {
+            k: pool.submit(v.localCheckpoint, eager=True) for k, v in raw_dims.items()
+        }
+        staged = {**tables, "texts": f_texts.result()}
+        return f_stage0.result(), staged, {k: f.result() for k, f in f_dims.items()}
+
+
+def build_slice(
+    spec: SliceSpec,
+    merged: DataFrame,
+    tables: dict[str, DataFrame],
+    dims: dict[str, DataFrame],
+    dates: JobDates,
+) -> DataFrame:
+    """Stages 1-3 + modify_data for one (geoid, distribution) slice
+    over the shared stage-0 ``merged`` and prepared ``dims``."""
+    first = basedata_first(merged, tables["texts"], spec.geoid, spec.distribution_type)
+    base = basedata_enrich(
+        first, tables["visibility"], tables["fraud"], tables["contacts"],
+        tables["visits"], dates, dims=dims,
+    )
+    final = basedata_final(base, first, dates, spec.price_amount_column)
+    return modify_data(
+        final, spec.geoid, dates.partition_month,
+        tables["bundeslaender"], tables["stadtlandkreise"],
+    )
 
 
 def consume_batch(
-    changelog: DataFrame,
-    texts: DataFrame,
-    visibility: DataFrame,
-    fraud_events: DataFrame,
-    contacts: DataFrame,
-    visits: DataFrame,
-    bundeslaender: DataFrame,
-    stadtlandkreise: DataFrame,
-    dates: JobDates,
-    *,
-    slices: tuple[SliceSpec, ...] = DEFAULT_SLICES,
-    materialize: bool = False,
-    stage0_mode: str = "staged",
-    stage0_storage=None,
-    stage0_staging: str | None = None,
+    tables: dict[str, DataFrame], dates: JobDates, work_dir: str
 ) -> DataFrame:
-    """The full job (script/main.py:300-368): stage 0 once, stages 1-3 +
-    modify_data per slice, UNION ALL accumulation. Stage-0 is shared by
-    every slice (reference C1 cache policy); WHERE it lives is the
-    ``stage0_mode`` knob.
-
-    ``stage0_mode="staged"`` (the DEFAULT since r9 — the r8 review's
-    one weak item was defaulting to the mode that loses at every
-    measured scale >= sf0.1): the merged change-log is written ONCE to
-    a snappy-parquet staging table, then every slice chain scans the
-    staged files. A parquet staging table has no cache-residency
-    limit, gets columnar scan + pruning on the read side, and its
-    write cost is one pass over stage-0 (which ``materialize=True``
-    pays anyway); the 64x probe measured 86.5s staged vs 230.8s cached
-    (the cached path's superlinear knee is cache pressure, and the
-    round-6 StorageLevel A/B proved no storage level fixes it), and
-    even at sf0.1 staged wins (6.9s vs 11.8s driver bench). The
-    staging dir is managed (a fresh per-call tmp dir) unless
-    ``stage0_staging`` names a path; callers that sink many runs
-    should pass an explicit path they own and reuse.
-
-    ``stage0_mode="cached"`` keeps stage-0 in the block-manager cache —
-    the documented SMALL-INPUT variant: when the merged change-log is
-    tiny (unit-test fixtures, sub-sf0.01 slices), the parquet
-    write+read round-trip costs more than it saves, and cached wins.
-    ``materialize=True`` runs one count() job to fill the cache before
-    the slice plans are consumed: a single downstream action over the
-    union would otherwise race all four slices into the cold cache and
-    recompute stage-0 per slice subtree. ``stage0_storage`` overrides
-    the cache's StorageLevel (cached mode only) — the tunable for
-    memory-bound clusters (round-6 A/B: the default deserialized
-    columnar cache was fastest at 64x; MEMORY_AND_DISK paid ~5%).
-
-    ``stage0_staging`` (r6 review ask #1) names an explicit staging
-    path (implies staged mode; the write IS the materialization)."""
-    if stage0_mode not in ("staged", "cached"):
-        raise ValueError(f"stage0_mode must be 'staged' or 'cached', got {stage0_mode!r}")
-    if stage0_staging is not None and stage0_mode == "cached":
-        # mirror the stage0_storage mutual-exclusion check (r9 ADVICE):
-        # an explicit cached request must not be silently overridden by
-        # the staging path's staged-mode implication
-        raise ValueError(
-            "stage0_staging implies staged mode and cannot be combined "
-            "with stage0_mode='cached'"
-        )
-    merged = merge_delete(filter_changelog(changelog), dates.first_day_past)
-    if stage0_staging is not None or stage0_mode == "staged":
-        if stage0_storage is not None:
-            raise ValueError("stage0 staging and stage0_storage are mutually exclusive")
-        staging = stage0_staging if stage0_staging is not None else _managed_staging_dir()
-        merged.write.mode("overwrite").parquet(staging)
-        merged = changelog.sparkSession.read.parquet(staging)
-    else:
-        merged = merged.persist(stage0_storage) if stage0_storage is not None else merged.cache()
-        if materialize:
-            merged.count()
-    # slice-independent enrichment inputs built ONCE and shared by all
-    # four slice subtrees: under the single downstream action the four
-    # identical summary subtrees become one exchange each via Spark's
-    # ReuseExchange instead of four (§2.4)
-    dims = prepare_enrich_dims(visibility, fraud_events, contacts, visits, dates)
-    parts = []
-    for spec in slices:
-        first = basedata_first(merged, texts, spec.geoid, spec.distribution_type)
-        base = basedata_enrich(
-            first, visibility, fraud_events, contacts, visits, dates, dims=dims
-        )
-        final = basedata_final(base, first, dates, spec.price_amount_column)
-        parts.append(
-            modify_data(final, spec.geoid, dates.partition_month, bundeslaender, stadtlandkreise)
-        )
-    return union_slices(parts, "ALL")
+    """The job's result without its sinks (script/main.py:300-368): the
+    :func:`stage_prep` prep once, stages 1-3 + modify_data per slice,
+    UNION ALL accumulation. Lazy past the prep jobs, so tests compare
+    against it and ``tools/scale_probe.py`` times and plan-audits it;
+    the staged files under ``work_dir`` and the dims' checkpoint blocks
+    must outlive the returned frame."""
+    merged, staged, dims = stage_prep(tables, dates, work_dir)
+    return union_slices(
+        [build_slice(spec, merged, staged, dims, dates) for spec in DEFAULT_SLICES], "ALL"
+    )
 
 
 def run_slices_concurrent(
     tables: dict[str, DataFrame],
     merged: DataFrame,
-    dates: "JobDates",
+    dates: JobDates,
     out_root: str,
     *,
-    slices=DEFAULT_SLICES,
+    dims: dict[str, DataFrame],
     json_clock: str | None = None,
-    count_rows: bool = False,
-    dims: dict[str, DataFrame] | None = None,
-) -> tuple[list[DataFrame], dict[str, int] | None]:
-    """The shared slice orchestration both the CLI job driver and the
-    e2e workload run (previously two hand-copied loops — r3 review):
-    build stages 1-3 + modify_data for each slice FROM the already
-    cached stage-0 ``merged``, sink each slice to single-file gzip CSV
-    + gzip JSON, all four chains CONCURRENTLY from a driver thread pool
-    (Spark schedules jobs from multiple threads onto one session;
-    measured ~1.9x over the reference's serial loop at sf0.1).
+) -> tuple[list[DataFrame], dict[str, int]]:
+    """Build each slice (:func:`build_slice`) from the staged stage-0
+    ``merged`` and the checkpointed ``dims``, count it and sink it to
+    single-file gzip CSV + gzip JSON, all four chains CONCURRENTLY from
+    a driver thread pool (Spark schedules jobs from multiple threads
+    onto one session; measured ~1.9x over the reference's serial loop
+    at sf0.1).
 
-    ``dims`` (optional) supplies ALREADY-MATERIALIZED slice-independent
-    enrichment inputs (the :func:`prepare_enrich_dims` frames, each
-    eagerly checkpointed) — callers that can overlap that
-    materialization with other prep jobs (§2.6; the e2e workload
-    overlaps it with the stage-0 staging write) pass them in; the
-    default path builds and checkpoints them here. Either way the
-    caller owns the blocks' lifecycle — see the Returns note.
-
-    Returns the cached slice frames (callers union + parquet-sink them
-    and must unpersist) and, with ``count_rows``, per-slice row counts.
-    Block-release obligation (r13 ADVICE): the dim checkpoints are
-    RDD-level blocks ``DataFrame.unpersist`` cannot release — after the
-    returned slices are unpersisted, callers in long-lived drivers
-    should release them via the ``persistent_rdd_ids`` /
-    ``release_new_persistent_rdds`` diff (streaming/sinks.py pattern);
-    the bench's between-pass persistent-block drop is that hygiene.
-    """
+    Returns the cached slice frames, which the caller unions into the
+    parquet sink and then unpersists, and the per-slice row counts."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..sinks.writers import write_csv_gzip, write_json_gzip
 
-    # the slice-independent enrichment inputs, computed ONCE and
-    # materialized (eager localCheckpoint) BEFORE the pool starts: the
-    # four slice chains are separate concurrent Spark jobs, so without
-    # this each chain re-runs the visibility filter, the fraud argmax
-    # and both counter group-bys — 4x the slice-independent shuffles —
-    # and would race each other into a cold cache (§2.4). The fraud/
-    # contacts/visits summaries are key-count-sized (one row per
-    # classifiedId / globalObjectKey); `active` is the raw filtered
-    # visibility projection (multiplicity-preserving BY DESIGN, so it
-    # can repeat a classifiedId) — filtered-visibility-sized, still
-    # never change-log-sized. Their blocks are process-persistent until
-    # the caller's block hygiene runs (bench drops persistent blocks
-    # between passes); they must NOT be released while the returned
-    # cached slices could still recompute (checkpoint-truncated
-    # lineage).
-    if dims is None:
-        dims = {
-            k: v.localCheckpoint(eager=True)
-            for k, v in prepare_enrich_dims(
-                tables["visibility"], tables["fraud"], tables["contacts"],
-                tables["visits"], dates,
-            ).items()
-        }
-
     def build_and_sink(spec):
-        first = basedata_first(merged, tables["texts"], spec.geoid, spec.distribution_type)
-        base = basedata_enrich(
-            first, tables["visibility"], tables["fraud"], tables["contacts"],
-            tables["visits"], dates, dims=dims,
-        )
-        final = basedata_final(base, first, dates, spec.price_amount_column)
-        sliced = modify_data(
-            final, spec.geoid, dates.partition_month,
-            tables["bundeslaender"], tables["stadtlandkreise"],
-        ).cache()
+        sliced = build_slice(spec, merged, tables, dims, dates).cache()
         tag = f"{spec.geoid}_{spec.distribution_type}"
-        n = sliced.count() if count_rows else None
+        n = sliced.count()
         write_csv_gzip(sliced, f"{out_root}/csv/{tag}", files=1)
-        shaped = (
-            shape_json_output(sliced, spec.distribution_type, clock=json_clock)
-            if json_clock is not None
-            else shape_json_output(sliced, spec.distribution_type)
-        )
+        shaped = shape_json_output(sliced, spec.distribution_type, clock=json_clock)
         write_json_gzip(shaped, f"{out_root}/json/{tag}", files=1)
         return tag, n, sliced
 
-    with ThreadPoolExecutor(max_workers=len(slices)) as pool:
-        results = list(pool.map(build_and_sink, slices))
-    parts = [sliced for _, _, sliced in results]
-    counts = {tag: n for tag, n, _ in results} if count_rows else None
-    return parts, counts
+    with ThreadPoolExecutor(max_workers=len(DEFAULT_SLICES)) as pool:
+        results = list(pool.map(build_and_sink, DEFAULT_SLICES))
+    return [sliced for _, _, sliced in results], {tag: n for tag, n, _ in results}
+
+
+def run_job(
+    tables: dict[str, DataFrame],
+    dates: JobDates,
+    out_root: str,
+    *,
+    json_clock: str | None = None,
+) -> dict[str, int]:
+    """The nightly job (script/main.py:300-416): :func:`stage_prep`,
+    then :func:`run_slices_concurrent` with its per-slice gzip sinks,
+    then the union into the month-partitioned parquet sink
+    ``<out_root>/parquet`` by dynamic partition overwrite, so a re-run
+    into the same ``out_root`` replaces its output. ``json_clock`` pins
+    the JSON sink's changelog timestamp (default: the current time).
+
+    Every block the job pinned (the slice caches and the dims'
+    checkpoints) is released before it returns. Returns the rows per
+    slice, keyed ``<geoid>_<distribution>``."""
+    from ..sinks.writers import overwrite_partitions
+    from ..streaming.sinks import persistent_rdd_ids, release_new_persistent_rdds
+
+    spark = tables["changelog"].sparkSession
+    before = persistent_rdd_ids(spark)
+    parts: list[DataFrame] = []
+    try:
+        merged, staged, dims = stage_prep(tables, dates, out_root)
+        parts, counts = run_slices_concurrent(
+            staged, merged, dates, out_root, dims=dims, json_clock=json_clock
+        )
+        overwrite_partitions(
+            union_slices(parts, "ALL"), f"{out_root}/parquet", ["partitionMonth"]
+        )
+    finally:
+        for p in parts:
+            p.unpersist()
+        release_new_persistent_rdds(spark, before)
+    return counts

@@ -464,12 +464,9 @@ def test_modify_data_output_shape(spark, fixture_tables):
     assert all(x.geo_state is None for x in at_row)
 
 
-def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables):
+def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables, tmp_path):
     con, t = fixture_tables
-    union = consume_batch(
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    )
+    union = consume_batch(t, DATES, str(tmp_path))
     rows = union.collect()
     assert len(rows) > 0
     assert {r.partitionGeoid for r in rows} <= {108, 103}
@@ -487,87 +484,30 @@ def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables):
     assert first_shaped.subTypes in ({"house": "VILLA"}, {"apartment": "PENTHOUSE"})
 
 
-def test_consume_batch_staged_equals_cached(spark, fixture_tables, tmp_path):
-    """stage0_staging (r6 review ask #1) must be a pure physical-plan
-    swap: writing stage-0 to a parquet staging table and scanning it
-    per slice yields row-identical output to the default cached path."""
-    _, t = fixture_tables
-    args = (
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    )
-    cached = consume_batch(*args, stage0_mode="cached")
-    staged = consume_batch(*args, stage0_staging=str(tmp_path / "stage0"))
-    assert staged.columns == cached.columns
-    canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
-    assert canon(staged) == canon(cached)
-    # the staging table actually exists and was scanned, not cached:
-    # the staged plan must read parquet files, never an InMemoryRelation
-    assert any((tmp_path / "stage0").glob("*.parquet"))
-    staged_plan = staged._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in staged_plan
-    assert "Scan parquet" in staged_plan
-    # the DEFAULT mode is staged since r9 (the r8 verdict's weak item):
-    # no mode argument must produce a staged plan, not a cached one
-    default_plan = consume_batch(*args)._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in default_plan
-    assert "Scan parquet" in default_plan
-    with pytest.raises(ValueError):
-        from pyspark import StorageLevel
+def _sink_counts(out_dir, kind):
+    """Rows per slice in the gzip CSV (minus its header) or JSON sink."""
+    import csv
+    import gzip
 
-        consume_batch(
-            *args,
-            stage0_staging=str(tmp_path / "s2"),
-            stage0_storage=StorageLevel.MEMORY_AND_DISK,
-        )
-    with pytest.raises(ValueError):
-        consume_batch(*args, stage0_mode="nonsense")
-    # an EXPLICIT cached request cannot be silently overridden by the
-    # staging path's staged-mode implication (r9 ADVICE)
-    with pytest.raises(ValueError):
-        consume_batch(
-            *args, stage0_mode="cached", stage0_staging=str(tmp_path / "s3")
-        )
+    counts = {}
+    for d in sorted((out_dir / kind).iterdir()):
+        n = 0
+        for f in d.glob("*.gz"):
+            with gzip.open(f, "rt", encoding="utf-8", newline="") as fh:
+                if kind == "csv":
+                    n += sum(1 for _ in csv.reader(fh)) - 1
+                else:
+                    n += sum(1 for line in fh if line.strip())
+        counts[d.name] = n
+    return counts
 
 
-def test_managed_staging_dirs_are_bounded_and_swept(spark, fixture_tables):
-    """The staged DEFAULT's managed per-call tmp dirs must not leak
-    (r9 verdict ask #7): each new managed call removes the previous
-    call's dir — a process holds at most ONE stage-0 copy — and the
-    atexit sweep removes the last one."""
-    import os
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines import (
-        consume_batch as cb_mod,
-    )
-
-    _, t = fixture_tables
-    args = (
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    )
-    first = consume_batch(*args)  # managed staged default
-    assert len(cb_mod._MANAGED_DIRS) == 1
-    first_dir = cb_mod._MANAGED_DIRS[0]
-    assert os.path.isdir(first_dir)
-    first.write.format("noop").mode("overwrite").save()  # consume fully
-    second = consume_batch(*args)
-    # the previous call's copy is gone; only the live one remains
-    assert not os.path.exists(first_dir)
-    assert len(cb_mod._MANAGED_DIRS) == 1
-    second_dir = cb_mod._MANAGED_DIRS[0]
-    assert second_dir != first_dir and os.path.isdir(second_dir)
-    second.write.format("noop").mode("overwrite").save()
-    # the atexit hook sweeps whatever remains
-    cb_mod._cleanup_managed_staging()
-    assert not os.path.exists(second_dir)
-    assert cb_mod._MANAGED_DIRS == []
-
-
-def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path):
+def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path, capsys):
     """tools/run_consume_batch.py end-to-end: same fixtures via parquet
-    inputs, all three reference sinks written, parquet row count equals
-    the in-process pipeline's."""
+    inputs, all three reference sinks written, the parquet sink
+    row-identical to the lazy ``consume_batch()`` reference, and a
+    second run into the same output dir gives identical sinks."""
+    import json
     import sys
     from pathlib import Path
 
@@ -578,41 +518,55 @@ def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path):
     in_dir, out_dir = tmp_path / "in", tmp_path / "out"
     for name in cli.INPUT_TABLES:
         t[name].write.mode("overwrite").parquet(str(in_dir / name))
+    argv = [
+        "--input-dir", str(in_dir),
+        "--output-dir", str(out_dir),
+        "--partition-date", "2024-07-15",
+        "--days-ago", "10",
+    ]
 
-    rc = cli.main(
-        [
-            "--input-dir", str(in_dir),
-            "--output-dir", str(out_dir),
-            "--partition-date", "2024-07-15",
-            "--days-ago", "10",
-        ]
-    )
-    assert rc == 0
+    expected = consume_batch(t, DATES, str(tmp_path / "ref"))
+    # the reference's slices scan the staged stage-0 parquet table,
+    # never a cache tier
+    assert any((tmp_path / "ref" / "_stage0_staging").glob("*.parquet"))
+    plan = expected._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    assert "Scan parquet" in plan
+    canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
+    want = canon(expected)
+    assert want
 
-    expected = consume_batch(
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    ).count()
-    got = spark.read.parquet(str(out_dir / "parquet")).count()
-    assert got == expected > 0
-    # --stage0-staging must produce the same parquet sink row count
-    out_staged = tmp_path / "out_staged"
-    rc = cli.main(
-        [
-            "--input-dir", str(in_dir),
-            "--output-dir", str(out_staged),
-            "--partition-date", "2024-07-15",
-            "--days-ago", "10",
-            "--stage0-staging", str(tmp_path / "stage0_cli"),
-        ]
+    runs = []
+    for _ in range(2):
+        capsys.readouterr()
+        assert cli.main(argv) == 0
+        reported = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        sink = spark.read.parquet(str(out_dir / "parquet")).select(*expected.columns)
+        csv_counts, json_counts = _sink_counts(out_dir, "csv"), _sink_counts(out_dir, "json")
+        # one gzip file per slice for both text sinks
+        for kind in ("csv", "json"):
+            slices = list((out_dir / kind).iterdir())
+            assert len(slices) == 4
+            assert all(len(list(s.glob("*.gz"))) == 1 for s in slices)
+        assert csv_counts == json_counts == reported["rows_per_slice"]
+        runs.append((canon(sink), csv_counts))
+    assert runs[0][0] == want
+    assert runs[1] == runs[0]
+
+
+def test_run_job_releases_its_blocks(spark, fixture_tables, tmp_path):
+    """run_job unpersists its slice caches and releases the dims'
+    localCheckpoint blocks once the parquet sink is written."""
+    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import run_job
+    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.streaming.sinks import (
+        persistent_rdd_ids,
     )
-    assert rc == 0
-    assert spark.read.parquet(str(out_staged / "parquet")).count() == expected
-    # one gzip file per slice for both text sinks that had rows
-    for kind in ("csv", "json"):
-        slices = list((out_dir / kind).iterdir())
-        assert len(slices) == 4
-        assert all(any(p.name.endswith(".gz") for p in s.iterdir()) for s in slices)
+
+    _, t = fixture_tables
+    before = persistent_rdd_ids(spark)
+    counts = run_job(t, DATES, str(tmp_path))
+    assert persistent_rdd_ids(spark) == before
+    assert sum(counts.values()) == spark.read.parquet(str(tmp_path / "parquet")).count() > 0
 
 
 def test_e2e_slices_reuse_cached_merge(spark):

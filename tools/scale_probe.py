@@ -17,7 +17,10 @@ linearity verdict (time ratio vs data ratio between the largest pair).
 from __future__ import annotations
 
 import argparse
+import os
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -28,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 from st_bigdata_consume_batch_ma_with_cr_ecd_spark.operators.aggregates import rounded_sum  # noqa: E402
 from st_bigdata_consume_batch_ma_with_cr_ecd_spark.operators.dedup import top_n_per_group  # noqa: E402
 from st_bigdata_consume_batch_ma_with_cr_ecd_spark.session import get_spark  # noqa: E402
+from time_query import _drop_persistent_blocks  # noqa: E402
 
 SHIFT = 1_000_000_000
 
@@ -207,37 +211,12 @@ def probes(
     t = derive_consume_inputs(spark, sf_dir, events=ev_m)
 
     def e2e_compute() -> None:
-        # the e2e workload's own shape: materialize the shared stage-0
-        # merge FIRST (one job), then the 4 slice chains read the
-        # InMemoryRelation — timing the unmaterialized plan instead
-        # recomputes stage-0 once per slice partition-tree
-        df = consume_batch(
-            t["changelog"], t["texts"], t["visibility"], t["fraud"],
-            t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-            _DATES,
-            stage0_mode="cached",
-            materialize=True,
-        )
-        df.write.format("noop").mode("overwrite").save()
-
-    def e2e_staged() -> None:
-        # staging twin (r6 review ask #1): stage-0 written ONCE to a
-        # parquet staging table, slices scan the files — the mode for
-        # when stage-0 outgrows the cache tier (the measured 64x knee)
-        import os
-        import shutil
-        import tempfile
-
-        staging = os.path.join(tempfile.gettempdir(), "spark_graft_probe_stage0")
+        # the job's prep (stage 0 staged to parquet, bucketed texts, dim
+        # checkpoints) then the lazy 4-slice union into the noop sink
+        staging = os.path.join(tempfile.gettempdir(), "spark_graft_probe_consume")
         shutil.rmtree(staging, ignore_errors=True)
         try:
-            df = consume_batch(
-                t["changelog"], t["texts"], t["visibility"], t["fraud"],
-                t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-                _DATES,
-                stage0_staging=staging,
-            )
-            df.write.format("noop").mode("overwrite").save()
+            consume_batch(t, _DATES, staging).write.format("noop").mode("overwrite").save()
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
@@ -1242,7 +1221,6 @@ def probes(
         "triangle_count": (triangles, n_li * mult),
         "triangle_count_approx": (triangles_approx, n_li * mult),
         "consume_e2e_compute": (e2e_compute, n_ev * mult),
-        "consume_e2e_staged": (e2e_staged, n_ev * mult),
         "kcore_peel": (kcore_compute, n_li * mult),
         "image_dedup": (image_dedup_compute, n_docs_i * mult),
         "image_dedup_k3": (image_dedup_k3_compute, n_docs_i * mult),
@@ -1363,59 +1341,21 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         ev_m = amplify(ev, mult, ["event_id", "user_id"])
         t = derive_consume_inputs(spark, sf_dir, events=ev_m)
-        df = consume_batch(
-            t["changelog"], t["texts"], t["visibility"], t["fraud"],
-            t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-            _DATES,
-            stage0_mode="cached",
-            materialize=True,
-        )
+        staging = os.path.join(tempfile.gettempdir(), "spark_graft_audit_consume")
+        shutil.rmtree(staging, ignore_errors=True)
         try:
-            plan = final_plan(df)
+            plan = final_plan(consume_batch(t, _DATES, staging))
         finally:
-            spark.catalog.clearCache()  # consume_batch caches its stage-0 merge
+            shutil.rmtree(staging, ignore_errors=True)
+        # slices scan the staged stage-0 files, never a cache tier
+        assert "InMemoryTableScan" not in plan, "e2e reads a cached stage 0"
+        assert "Scan parquet" in plan, "e2e lost its staged parquet scan"
         assert "CartesianProduct" not in plan, "e2e grew an unguarded cross join"
         assert "BroadcastNestedLoopJoin" not in plan, (
             "e2e grew a nested-loop join — a non-equi condition stopped "
             "planning as hash/merge"
         )
         assert_no_checkpoint_broadcasts(plan, "consume_e2e_compute")
-
-    def consume_e2e_staged_scans_parquet() -> None:
-        import os
-        import shutil
-        import tempfile
-
-        from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
-            consume_batch,
-        )
-        from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.consume_e2e import (
-            _DATES,
-            derive_consume_inputs,
-        )
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev_m = amplify(ev, mult, ["event_id", "user_id"])
-        t = derive_consume_inputs(spark, sf_dir, events=ev_m)
-        staging = os.path.join(tempfile.gettempdir(), "spark_graft_audit_stage0")
-        shutil.rmtree(staging, ignore_errors=True)
-        try:
-            df = consume_batch(
-                t["changelog"], t["texts"], t["visibility"], t["fraud"],
-                t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-                _DATES,
-                stage0_staging=staging,
-            )
-            plan = final_plan(df)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        # staging mode must never fall back to the cache tier, and the
-        # staged scan must stay join-safe like the cached plan
-        assert "InMemoryTableScan" not in plan, "staged e2e still reads the cache"
-        assert "Scan parquet" in plan, "staged e2e lost its parquet scan"
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert_no_checkpoint_broadcasts(plan, "consume_e2e_staged")
 
     def jaccard_verify_pins_hold() -> None:
         from st_bigdata_consume_batch_ma_with_cr_ecd_spark.llm.dedup import (
@@ -1960,7 +1900,6 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
 
     return {
         "consume_e2e_compute": consume_e2e_no_data_sized_broadcast,
-        "consume_e2e_staged": consume_e2e_staged_scans_parquet,
         "fuzzy_er_closure": fuzzy_er_round_join_stays_smj,
         "fuzzy_k2": fuzzy_k2_stays_grouped_no_join,
         "jaccard_verify": jaccard_verify_pins_hold,
@@ -2329,18 +2268,6 @@ def multimodal_nights(
         f"to {expect_off}; stats advanced exactly per night"
     )
     return rows
-
-
-def _drop_persistent_blocks(spark) -> None:
-    """Release every persistent RDD block (localCheckpoints included) —
-    bench.py's inter-query cleanup: the async ContextCleaner lags
-    Python refcounts, so without this each audit/probe runs against
-    executors still carrying its predecessors' blocks (the documented
-    64x OOM mode)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    it = jmap.entrySet().iterator()
-    while it.hasNext():
-        it.next().getValue().unpersist(False)
 
 
 def main() -> int:

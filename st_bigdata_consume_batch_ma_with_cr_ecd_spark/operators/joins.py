@@ -16,6 +16,8 @@ reference does beyond that, generalized:
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -25,9 +27,9 @@ def summarize_for_join(
     detail: DataFrame, keys: Sequence[str], aggs: Mapping[str, Column]
 ) -> DataFrame:
     """The group-by half of :func:`join_preaggregated`, exposed so a
-    caller joining the SAME summary onto several facts (the 4-slice
-    consume-batch loop) can build it once and share/materialize it
-    instead of re-aggregating the detail table per fact (§2.4)."""
+    caller joining the SAME summary onto several facts can build it
+    once and share/materialize it instead of re-aggregating the detail
+    table per fact (§2.4)."""
     return detail.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
 
 
@@ -65,7 +67,12 @@ def join_preaggregated(
 
 
 def not_in_anti_join(
-    left: DataFrame, right_keys: DataFrame, left_key: str, right_key: str | None = None
+    left: DataFrame,
+    right_keys: DataFrame,
+    left_key: str,
+    right_key: str | None = None,
+    *,
+    within: Sequence[str] = (),
 ) -> DataFrame:
     """J6: SQL ``left_key NOT IN (SELECT right_key FROM ...)``, faithfully.
 
@@ -74,23 +81,34 @@ def not_in_anti_join(
     Catalyst gets this right when expressed as a NOT IN subquery — so we
     express it exactly that way via the DataFrame API equivalent:
     a ``left_anti`` join guarded by the two null checks.
+
+    ``within`` names columns present on both sides that scope the
+    subquery: a left row is tested only against the right keys with
+    equal ``within`` values, and a null key empties only its own scope.
+    One keyed call then equals one NOT IN per group (the consume job's
+    per-slice stale-id elimination, run once for all slices).
     """
     rk = right_key or left_key
-    keys = right_keys.select(F.col(rk).alias("__nik"))
-    has_null_key = keys.where(F.col("__nik").isNull()).limit(1)
+    scope = [f"__niw{i}" for i in range(len(within))]
+    keys = right_keys.select(
+        F.col(rk).alias("__nik"), *[F.col(c).alias(s) for c, s in zip(within, scope)]
+    )
+    same_scope = [F.col(c) == F.col(s) for c, s in zip(within, scope)]
     # left_anti with null-safe guard: drop left-null keys (3-valued logic
     # makes `x NOT IN (...)` never true when x IS NULL) ...
     filtered = left.where(F.col(left_key).isNotNull()).join(
-        keys, F.col(left_key) == F.col("__nik"), "left_anti"
+        keys, reduce(and_, same_scope, F.col(left_key) == F.col("__nik")), "left_anti"
     )
-    # ... and return nothing at all if the subquery contains a null.
-    # cross-join on the "is empty" marker keeps it fully distributed
-    # (no driver-side .count() materialization of the big side).
-    marker = has_null_key.select(F.lit(1).alias("__has_null")).limit(1)
+    # ... and return nothing at all (in that scope) if the subquery
+    # contains a null. The left join on the "has a null" marker keeps it
+    # fully distributed (no driver-side .count() materialization of the
+    # big side).
+    has_null = keys.where(F.col("__nik").isNull()).select(*scope, F.lit(1).alias("__has_null"))
+    marker = has_null.distinct() if within else has_null.limit(1)
     return (
-        filtered.join(F.broadcast(marker), F.lit(True), "left")
+        filtered.join(F.broadcast(marker), reduce(and_, same_scope, F.lit(True)), "left")
         .where(F.col("__has_null").isNull())
-        .drop("__has_null")
+        .drop("__has_null", *scope)
     )
 
 

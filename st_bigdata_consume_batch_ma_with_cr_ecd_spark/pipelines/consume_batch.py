@@ -6,29 +6,42 @@ the same nightly computation here): the 3-stage SQL chain plus the
 DataFrame transforms, on reference-shaped inputs (FIXTURES.md §1-§7),
 built from this package's operator library instead of Glue/SQL text.
 
+The reference loops over four country/distribution slices and re-runs
+stages 1-3 for each (script/main.py:300-368). Here stages 1-3 and
+``modify_data`` run ONCE over all slices, keyed by the slice: every
+per-listing window, group-by and NOT-IN subquery is partitioned by
+``(substring(iwtLegacyGeoID, 1, 3), cleaned_classified_distributionType)``
+as well, which after ``modify_data`` is ``(partitionGeoid,
+classified_distributionType)``. Only the sinks split the result by slice.
+
 Stage map (reference citations):
 
 - ``filter_changelog``   — script/main.py:74-89 (F1/F2 filters)
 - ``merge_delete``       — script/static_files/queries/0-merge_delete_query.sql
-  (delete-event attribute backfill: as-of inner join + top-1 + union)
+  (delete-event attribute backfill: as-of inner join + top-1 + union;
+  the as-of pick ranks narrow donor keys, the payload joins back)
 - ``basedata_first``     — 1-basedata_first_query.sql (per-day latest
-  version + text join), parameterized by (geoid prefix, distribution)
+  version + text join), slice-keyed
 - ``basedata_enrich``    — 2-basedata_df_query.sql (visibility inner
-  join + fraud argmax + counter sums, 3 left joins)
+  join + fraud argmax + counter sums, 3 left joins); per row, so the
+  slice key passes through
 - ``basedata_final``     — 3-basedata_df_final_query.sql (stale-id NOT
-  IN elimination, fraud filter, price-change history union)
+  IN elimination, fraud filter, price-change history union), slice-keyed;
+  the price key is the slice's distribution price
 - ``modify_data``        — script/main.py:157-193 (rooms rounding, city
-  regexp, prefix strip, conditional geo broadcast joins, partition cols)
+  regexp, prefix strip, geo broadcast joins for the 108 slices only,
+  partition cols)
 - ``shape_json_output``  — script/helper.py:99-186 (subTypes map,
   distribution price projection, renames/drops, changelog metadata,
-  flat->nested struct schema)
+  flat->nested struct schema), per slice
+- ``consume_batch``      — the job's result without its sinks: the prep
+  (stage 0 staged once), then the slice-keyed stages 1-3 +
+  ``modify_data``, lazy, for tests and probes
 - ``run_job``            — the nightly job (script/main.py:300-416):
-  stage 0 staged once, the 4-slice country/distribution chains, the
-  gzip JSON/CSV and month-partitioned parquet sinks. The CLI
-  (``tools/run_consume_batch.py``) and the ``pipeline_consume_batch_e2e``
-  query both run it.
-- ``consume_batch``      — the same prep and slice chains as one lazy,
-  sink-free UNION ALL (script/main.py:300-368), for tests and probes
+  ``consume_batch`` cached once, per-slice gzip JSON/CSV sinks as
+  filters of that cache, and the month-partitioned parquet sink. The
+  CLI (``tools/run_consume_batch.py``) and the
+  ``pipeline_consume_batch_e2e`` query both run it.
 
 Semantics preserved on purpose (SURVEY.md §4): the visibility join is
 multiplicity-preserving INNER (not semi); stale-id elimination is
@@ -43,7 +56,7 @@ import hashlib
 from dataclasses import dataclass
 from datetime import date, timedelta
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import prefix_select, strip_prefix
@@ -67,6 +80,12 @@ VALID_PREFIXES = ("classified_", "cleaned_", "cleanup", "extracted_", "grenzwert
 DISTRIBUTIONS = ("RENT", "BUY")
 ESTATE_TYPES = ("HOUSE", "APARTMENT")
 GEO_PREFIXES = ("108", "103")
+
+#: the slice key's columns (before ``modify_data`` strips ``cleaned_``)
+GEO_COL = "classified_geo_countrySpecific_de_iwtLegacyGeoID"
+DIST_COL = "cleaned_classified_distributionType"
+BUY_PRICE = "cleaned_classified_prices_buy_price_amount"
+RENT_PRICE = "cleaned_classified_prices_rent_baseRent_amount"
 
 #: script/config.json:156-160
 GEO_DROP_COLUMNS = (
@@ -112,15 +131,12 @@ class SliceSpec:
 
     @property
     def price_amount_column(self) -> str:
-        if self.distribution_type == "BUY":
-            return "cleaned_classified_prices_buy_price_amount"
-        return "cleaned_classified_prices_rent_baseRent_amount"
+        return BUY_PRICE if self.distribution_type == "BUY" else RENT_PRICE
 
     @property
-    def operating_cost_column(self) -> str:
-        if self.distribution_type == "BUY":
-            return "cleaned_classified_prices_buy_operatingCosts_amount"
-        return "cleaned_classified_prices_rent_operatingCosts_amount"
+    def tag(self) -> str:
+        """The slice's sink directory name, ``<geoid>_<distribution>``."""
+        return f"{self.geoid}_{self.distribution_type}"
 
 
 DEFAULT_SLICES = tuple(
@@ -133,11 +149,16 @@ def payload_columns(df: DataFrame) -> list[str]:
     return prefix_select(df, list(VALID_PREFIXES))
 
 
+def slice_geo() -> Column:
+    """The geoid half of the slice key: ``108`` Germany, ``103`` Austria."""
+    return F.substring(F.col(GEO_COL), 1, 3)
+
+
 def filter_changelog(df: DataFrame) -> DataFrame:
     """script/main.py:74-89."""
-    geo = F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID")
+    geo = F.col(GEO_COL)
     return df.where(
-        F.col("cleaned_classified_distributionType").isin(*DISTRIBUTIONS)
+        F.col(DIST_COL).isin(*DISTRIBUTIONS)
         & (geo.startswith(GEO_PREFIXES[0]) | geo.startswith(GEO_PREFIXES[1]))
         & F.col("classified_estateType").isin(*ESTATE_TYPES)
     )
@@ -160,13 +181,13 @@ def merge_delete(filtered: DataFrame, first_day_past: str) -> DataFrame:
         (F.col("operation") != "Delete") & F.col("classified_metaData_classifiedId").isNotNull()
     )
 
-    # donors carry id so the latest-donor pick is TOTAL under equal
-    # changeDates (same-timestamp updates are routine in change logs);
-    # matches the e2e oracle's ORDER BY changeDate DESC, id DESC
-    donors = non_deleted.select(
-        "globalObjectKey", F.col("changeDate"), F.col("id"), *payload
-    )
-    backfilled = asof_join(
+    # the as-of pick ranks narrow donor keys only; the winners' payload
+    # joins back on donor_id, exact because id is unique per change-log
+    # row (FIXTURES.md §1). Donor id makes the pick TOTAL under equal
+    # changeDates (same-timestamp updates are routine in change logs),
+    # matching the e2e oracle's ORDER BY changeDate DESC, id DESC
+    donors = non_deleted.select("globalObjectKey", "changeDate", F.col("id").alias("donor_id"))
+    picks = asof_join(
         deleted,
         donors,
         on=["globalObjectKey"],
@@ -174,26 +195,32 @@ def merge_delete(filtered: DataFrame, first_day_past: str) -> DataFrame:
         right_ts="changeDate",
         how="inner",
         left_id="id",
-        tiebreak="id",
-    ).drop("changeDate_right").drop("id_right")
+        tiebreak="donor_id",
+    ).drop("changeDate_right")
+    donor_payload = non_deleted.select(F.col("id").alias("donor_id"), *payload)
+    backfilled = picks.join(donor_payload, "donor_id")
 
     healthy = non_deleted.where(date_ok).select(*_CORE, *payload)
     return union_slices([backfilled.select(*_CORE, *payload), healthy], "ALL")
 
 
-def basedata_first(
-    merged: DataFrame, texts: DataFrame, geoid: int, distribution_type: str
-) -> DataFrame:
-    """1-basedata_first_query.sql — slice filters, latest version per
-    (classifiedId, change-day), 8-column text enrichment."""
+def basedata_first(merged: DataFrame, texts: DataFrame) -> DataFrame:
+    """1-basedata_first_query.sql for all four slices at once — slice
+    filters, latest version per (slice, classifiedId, change-day),
+    8-column text enrichment."""
     sliced = merged.where(
-        F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID").startswith(str(geoid))
+        slice_geo().isin(*GEO_PREFIXES)
         & (F.col("cleanupdataproblems") <= 3)
-        & (F.col("cleaned_classified_distributionType") == distribution_type)
+        & F.col(DIST_COL).isin(*DISTRIBUTIONS)
     )
     latest = top_n_per_group(
         sliced,
-        [F.col("classified_metaData_classifiedId"), F.to_date(F.col("classified_metaData_changeDate"))],
+        [
+            slice_geo(),
+            F.col(DIST_COL),
+            F.col("classified_metaData_classifiedId"),
+            F.to_date(F.col("classified_metaData_changeDate")),
+        ],
         [
             F.col("classified_metaData_changeDate").desc(),
             F.col("partitionChangeDate").desc(),
@@ -207,8 +234,8 @@ def basedata_first(
 
 #: 2-basedata_df_query.sql:27-63 — the counter sums and their COALESCE
 #: defaults, factored so the once-per-job summaries
-#: (:func:`prepare_enrich_dims`) and the per-slice joins
-#: (:func:`basedata_enrich`) can never drift apart. Functions, not
+#: (:func:`prepare_enrich_dims`) and the joins of
+#: :func:`basedata_enrich` can never drift apart. Functions, not
 #: module constants: Column construction needs an active SparkContext.
 _CONTACT_NAMES = (
     "userDefined_immoWelt_contact_requests",
@@ -245,12 +272,11 @@ def prepare_enrich_dims(
     visits: DataFrame,
     dates: JobDates,
 ) -> dict[str, DataFrame]:
-    """The slice-INDEPENDENT inputs of ``basedata_enrich``, factored
-    out so the 4-slice loop computes each exactly once (§2.4): the
+    """The slice-INDEPENDENT inputs of ``basedata_enrich`` (§2.4): the
     active-visibility key set, the fraud argmax, and the contact/visit
-    counter summaries do not depend on (geoid, distribution), yet the
-    concurrent slice chains are separate Spark jobs — without sharing,
-    every chain re-runs all four distinct/group-by shuffles."""
+    counter summaries, which do not depend on (geoid, distribution).
+    Factored out so :func:`stage_prep` can materialize them alongside
+    the stage-0 write, before the chain that joins them is planned."""
     active = visibility.where(
         (F.col("aktivbis") >= F.to_date(F.lit(dates.first_day_current_month)))
         & (F.col("aktivab") < F.to_date(F.lit(dates.partition_date)))
@@ -310,10 +336,9 @@ def basedata_enrich(
     counter sums, three left joins.
 
     ``dims`` (optional) supplies the slice-independent inputs prebuilt
-    by :func:`prepare_enrich_dims` — callers enriching several slices
-    pass one shared (ideally materialized) set instead of re-deriving
-    the aggregates per slice; the default path builds them inline and
-    is row-identical by construction (same expressions, same joins)."""
+    by :func:`prepare_enrich_dims` (ideally materialized); the default
+    path builds them inline and is row-identical by construction (same
+    expressions, same joins)."""
     cid = "classified_metaData_classifiedId"
     if dims is None:
         dims = prepare_enrich_dims(visibility, fraud_events, contacts, visits, dates)
@@ -336,57 +361,61 @@ def basedata_enrich(
     return out.drop("classifiedId")
 
 
-def basedata_final(
-    base: DataFrame, first: DataFrame, dates: JobDates, price_amount_column: str
-) -> DataFrame:
-    """3-basedata_df_final_query.sql — stale-id NOT IN elimination,
-    fraud filter, per-(id, price) current-month latest UNION last
-    pre-month record. ``partitionChangeDate`` compares as ISO string
-    here (reference lines 54/65), unlike stage 0's ``to_date``."""
+def basedata_final(base: DataFrame, first: DataFrame, dates: JobDates) -> DataFrame:
+    """3-basedata_df_final_query.sql, slice-keyed — stale-id NOT IN
+    elimination within each slice, fraud filter, per-(slice, id, price)
+    current-month latest UNION per-(slice, id) last pre-month record;
+    the price is the slice distribution's. ``partitionChangeDate``
+    compares as ISO string here (reference lines 54/65), unlike stage
+    0's ``to_date``."""
     cid = "classified_metaData_classifiedId"
     ts = "classified_metaData_changeDate"
+    sg = "__sliceGeo"
+    key = [sg, DIST_COL, cid]
 
-    base_max = base.groupBy(cid).agg(F.max(ts).alias("m"))
+    base = base.withColumn(sg, slice_geo())
+    base_max = base.groupBy(*key).agg(F.max(ts).alias("m"))
     all_max = (
         first.where(F.col(ts) < dates.first_day_current_month)
-        .groupBy(cid)
+        .groupBy(slice_geo().alias(sg), DIST_COL, cid)
         .agg(F.max(ts).alias("m_all"))
     )
     invalid = (
-        base_max.join(all_max, cid, "left")
+        base_max.join(all_max, key, "left")
         .where(F.col("m") < F.col("m_all"))
-        .select(F.col(cid).alias("invalid_id"))
+        .select(sg, DIST_COL, F.col(cid).alias("invalid_id"))
     )
-    final = not_in_anti_join(base, invalid, cid, "invalid_id").where(
+    final = not_in_anti_join(base, invalid, cid, "invalid_id", within=[sg, DIST_COL]).where(
         F.col("fraudLevelId") <= 0
     )
 
+    price = F.when(F.col(DIST_COL) == "BUY", F.col(BUY_PRICE)).otherwise(F.col(RENT_PRICE))
     order = [F.col(ts).desc(), F.col("partitionChangeDate").desc(), F.col("id").desc()]
     current = top_n_per_group(
         final.where(F.col("partitionChangeDate") >= dates.first_day_current_month),
-        [F.col(cid), F.col(price_amount_column)],
+        [*key, price],
         order,
         rank_col="row_num",
     )
     previous = top_n_per_group(
         final.where(F.col("partitionChangeDate") < dates.first_day_current_month),
-        [F.col(cid)],
+        key,
         order,
         rank_col="row_num",
     )
-    return union_slices([current, previous], "ALL")
+    return union_slices([current, previous], "ALL").drop(sg)
 
 
 def modify_data(
     final: DataFrame,
-    geoid: int,
     partition_month: str,
     bundeslaender: DataFrame,
     stadtlandkreise: DataFrame,
 ) -> DataFrame:
     """script/main.py:157-193 — numeric/text cleanup, cleaned_ prefix
-    strip (single projection, not N renames), geo enrichment for Germany
-    only, drop list, partition columns."""
+    strip (single projection, not N renames), geo enrichment for the
+    Germany slices only (an Austrian row's lookup key is NULL, so it
+    never matches), drop list, partition columns."""
     df = final.withColumn(
         "cleaned_classified_structure_rooms_numberofrooms",
         F.round(F.col("cleaned_classified_structure_rooms_numberofrooms")).cast("int"),
@@ -395,27 +424,20 @@ def modify_data(
     )
     df = strip_prefix(df, "cleaned_")
 
-    if geoid == 108:
-        geo_key = F.substring(F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID"), 1, 5)
-        df = broadcast_lookup_join(
-            df, bundeslaender, geo_key.cast("int"), "geoid", dim_cols=["geoid", "bundesland"]
-        )
-        geo_key8 = F.substring(F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID"), 1, 8)
-        df = broadcast_lookup_join(
-            df, stadtlandkreise, geo_key8.cast("int"), "geoid", dim_cols=["geoid", "landkreis"]
-        )
-        df = df.withColumnRenamed("bundesland", "geo_state").withColumnRenamed(
-            "landkreis", "geo_userDefined_immoWelt_county"
-        )
-    else:
-        df = df.withColumn("geo_state", F.lit(None).cast("string")).withColumn(
-            "geo_userDefined_immoWelt_county", F.lit(None).cast("string")
-        )
+    def de_key(n: int) -> Column:
+        return F.when(slice_geo() == "108", F.substring(F.col(GEO_COL), 1, n)).cast("int")
 
-    df = df.drop(*[c for c in GEO_DROP_COLUMNS if c in df.columns])
-    return df.withColumn("partitionGeoid", F.lit(geoid)).withColumn(
-        "partitionMonth", F.lit(partition_month)
+    df = broadcast_lookup_join(
+        df, bundeslaender, de_key(5), "geoid", dim_cols=["geoid", "bundesland"]
     )
+    df = broadcast_lookup_join(
+        df, stadtlandkreise, de_key(8), "geoid", dim_cols=["geoid", "landkreis"]
+    )
+    df = df.withColumnsRenamed(
+        {"bundesland": "geo_state", "landkreis": "geo_userDefined_immoWelt_county"}
+    ).withColumn("partitionGeoid", slice_geo().cast("int"))
+    df = df.drop(*[c for c in GEO_DROP_COLUMNS if c in df.columns])
+    return df.withColumn("partitionMonth", F.lit(partition_month))
 
 
 ESTATE_SUBTYPE_SOURCE = {
@@ -495,17 +517,17 @@ def stage_prep(
 
     - stage 0 (filter + merge_delete, reference C1: computed once for
       all slices) written to the parquet table
-      ``<work_dir>/_stage0_staging`` and scanned back, so every slice
-      chain gets a columnar scan with pruning;
+      ``<work_dir>/_stage0_staging`` and scanned back, so the
+      slice-keyed chain gets a columnar scan with pruning;
     - the texts enrichment staged BUCKETED and sorted by ``id``
       (``operators.partitioning.stage_bucketed_by_key``) under
       ``<work_dir>/_texts_bucketed``, so past the broadcast threshold
-      no slice's texts join exchanges or sorts the texts side
+      the texts join neither exchanges nor sorts the texts side
       (plans/r14/consume_texts_join_{before,after}.txt);
     - the :func:`prepare_enrich_dims` frames, each eagerly
-      ``localCheckpoint``ed, so the four concurrent slice chains share
-      one visibility filter, fraud argmax and counter summary instead
-      of each re-running those shuffles (§2.4).
+      ``localCheckpoint``ed, so the chain's enrichment joins read the
+      visibility filter, fraud argmax and counter summaries from
+      memory while the stage-0 and texts writes run (§2.4).
 
     Returns the staged stage-0 frame, ``tables`` with its texts
     replaced by the bucketed read-back, and the checkpointed dims. The
@@ -542,76 +564,66 @@ def stage_prep(
         return f_stage0.result(), staged, {k: f.result() for k, f in f_dims.items()}
 
 
-def build_slice(
-    spec: SliceSpec,
-    merged: DataFrame,
-    tables: dict[str, DataFrame],
-    dims: dict[str, DataFrame],
-    dates: JobDates,
-) -> DataFrame:
-    """Stages 1-3 + modify_data for one (geoid, distribution) slice
-    over the shared stage-0 ``merged`` and prepared ``dims``."""
-    first = basedata_first(merged, tables["texts"], spec.geoid, spec.distribution_type)
-    base = basedata_enrich(
-        first, tables["visibility"], tables["fraud"], tables["contacts"],
-        tables["visits"], dates, dims=dims,
-    )
-    final = basedata_final(base, first, dates, spec.price_amount_column)
-    return modify_data(
-        final, spec.geoid, dates.partition_month,
-        tables["bundeslaender"], tables["stadtlandkreise"],
-    )
-
-
 def consume_batch(
     tables: dict[str, DataFrame], dates: JobDates, work_dir: str
 ) -> DataFrame:
     """The job's result without its sinks (script/main.py:300-368): the
-    :func:`stage_prep` prep once, stages 1-3 + modify_data per slice,
-    UNION ALL accumulation. Lazy past the prep jobs, so tests compare
-    against it and ``tools/scale_probe.py`` times and plan-audits it;
-    the staged files under ``work_dir`` and the dims' checkpoint blocks
-    must outlive the returned frame."""
+    :func:`stage_prep` prep once, then stages 1-3 + modify_data over all
+    four slices as one slice-keyed chain. Lazy past the prep jobs, so
+    :func:`run_job` caches it, tests compare against it and
+    ``tools/scale_probe.py`` times and plan-audits it; the staged files
+    under ``work_dir`` and the dims' checkpoint blocks must outlive the
+    returned frame."""
     merged, staged, dims = stage_prep(tables, dates, work_dir)
-    return union_slices(
-        [build_slice(spec, merged, staged, dims, dates) for spec in DEFAULT_SLICES], "ALL"
+    first = basedata_first(merged, staged["texts"])
+    base = basedata_enrich(
+        first, staged["visibility"], staged["fraud"], staged["contacts"],
+        staged["visits"], dates, dims=dims,
+    )
+    final = basedata_final(base, first, dates)
+    return modify_data(
+        final, dates.partition_month, staged["bundeslaender"], staged["stadtlandkreise"]
     )
 
 
 def run_slices_concurrent(
-    tables: dict[str, DataFrame],
-    merged: DataFrame,
-    dates: JobDates,
-    out_root: str,
-    *,
-    dims: dict[str, DataFrame],
-    json_clock: str | None = None,
-) -> tuple[list[DataFrame], dict[str, int]]:
-    """Build each slice (:func:`build_slice`) from the staged stage-0
-    ``merged`` and the checkpointed ``dims``, count it and sink it to
-    single-file gzip CSV + gzip JSON, all four chains CONCURRENTLY from
-    a driver thread pool (Spark schedules jobs from multiple threads
-    onto one session; measured ~1.9x over the reference's serial loop
-    at sf0.1).
+    keyed: DataFrame, out_root: str, *, json_clock: str | None = None
+) -> dict[str, int]:
+    """The per-slice sinks over ``keyed``, the cached
+    :func:`consume_batch` frame: one ``groupBy(slice).count()`` action
+    (which also materializes the cache), then each slice as a filter of
+    the cache to single-file gzip CSV + gzip JSON, all eight writes
+    CONCURRENTLY from one driver pool (Spark schedules jobs from
+    several threads onto one session). ``single_file`` (``coalesce(1)``)
+    over the materialized cache narrows only the write itself and needs
+    no shuffle, unlike ``files=1``'s ``repartition(1)``.
 
-    Returns the cached slice frames, which the caller unions into the
-    parquet sink and then unpersists, and the per-slice row counts."""
+    Returns the rows per slice, keyed ``<geoid>_<distribution>``."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..sinks.writers import write_csv_gzip, write_json_gzip
 
-    def build_and_sink(spec):
-        sliced = build_slice(spec, merged, tables, dims, dates).cache()
-        tag = f"{spec.geoid}_{spec.distribution_type}"
-        n = sliced.count()
-        write_csv_gzip(sliced, f"{out_root}/csv/{tag}", files=1)
-        shaped = shape_json_output(sliced, spec.distribution_type, clock=json_clock)
-        write_json_gzip(shaped, f"{out_root}/json/{tag}", files=1)
-        return tag, n, sliced
-
-    with ThreadPoolExecutor(max_workers=len(DEFAULT_SLICES)) as pool:
-        results = list(pool.map(build_and_sink, DEFAULT_SLICES))
-    return [sliced for _, _, sliced in results], {tag: n for tag, n, _ in results}
+    found = {
+        (geoid, dist): n
+        for geoid, dist, n in keyed.groupBy(
+            "partitionGeoid", "classified_distributionType"
+        ).count().collect()
+    }
+    with ThreadPoolExecutor(max_workers=2 * len(DEFAULT_SLICES)) as pool:
+        writes = []
+        for spec in DEFAULT_SLICES:
+            sliced = keyed.where(
+                (F.col("partitionGeoid") == spec.geoid)
+                & (F.col("classified_distributionType") == spec.distribution_type)
+            )
+            shaped = shape_json_output(sliced, spec.distribution_type, clock=json_clock)
+            writes += [
+                pool.submit(write_csv_gzip, sliced, f"{out_root}/csv/{spec.tag}", single_file=True),
+                pool.submit(write_json_gzip, shaped, f"{out_root}/json/{spec.tag}", single_file=True),
+            ]
+        for w in writes:
+            w.result()
+    return {s.tag: found.get((s.geoid, s.distribution_type), 0) for s in DEFAULT_SLICES}
 
 
 def run_job(
@@ -621,14 +633,14 @@ def run_job(
     *,
     json_clock: str | None = None,
 ) -> dict[str, int]:
-    """The nightly job (script/main.py:300-416): :func:`stage_prep`,
-    then :func:`run_slices_concurrent` with its per-slice gzip sinks,
-    then the union into the month-partitioned parquet sink
-    ``<out_root>/parquet`` by dynamic partition overwrite, so a re-run
-    into the same ``out_root`` replaces its output. ``json_clock`` pins
-    the JSON sink's changelog timestamp (default: the current time).
+    """The nightly job (script/main.py:300-416): :func:`consume_batch`
+    cached once, :func:`run_slices_concurrent` with its per-slice gzip
+    sinks, then the month-partitioned parquet sink ``<out_root>/parquet``
+    by dynamic partition overwrite, so a re-run into the same
+    ``out_root`` replaces its output. ``json_clock`` pins the JSON
+    sink's changelog timestamp (default: the current time).
 
-    Every block the job pinned (the slice caches and the dims'
+    Every block the job pinned (the result cache and the dims'
     checkpoints) is released before it returns. Returns the rows per
     slice, keyed ``<geoid>_<distribution>``."""
     from ..sinks.writers import overwrite_partitions
@@ -636,17 +648,13 @@ def run_job(
 
     spark = tables["changelog"].sparkSession
     before = persistent_rdd_ids(spark)
-    parts: list[DataFrame] = []
+    keyed: DataFrame | None = None
     try:
-        merged, staged, dims = stage_prep(tables, dates, out_root)
-        parts, counts = run_slices_concurrent(
-            staged, merged, dates, out_root, dims=dims, json_clock=json_clock
-        )
-        overwrite_partitions(
-            union_slices(parts, "ALL"), f"{out_root}/parquet", ["partitionMonth"]
-        )
+        keyed = consume_batch(tables, dates, out_root).cache()
+        counts = run_slices_concurrent(keyed, out_root, json_clock=json_clock)
+        overwrite_partitions(keyed, f"{out_root}/parquet", ["partitionMonth"])
     finally:
-        for p in parts:
-            p.unpersist()
+        if keyed is not None:
+            keyed.unpersist()
         release_new_persistent_rdds(spark, before)
     return counts

@@ -11,11 +11,21 @@ Open-Spark replacements for the reference's three outputs
   one idempotent write)
 
 Scale note on "one output file": the reference uses ``coalesce(1)``
-(``script/main.py:389``), which caps the *entire final stage* at one
-task — the #1 scalability hazard in the reference. We keep the intent
-behind an explicit ``files=`` knob but implement it as a post-shuffle
-``repartition(n)``, so upstream stages keep full parallelism and only
-the write itself is narrow.
+(``script/main.py:389``) over an uncached frame, which caps the
+*entire final stage* at one task — the #1 scalability hazard in the
+reference. Two ways to get one file:
+
+- ``files=n`` is a post-shuffle ``repartition(n)``: upstream stages
+  keep full parallelism and only the write itself is narrow, at the
+  price of one shuffle per write. The safe choice over uncached input.
+- ``single_file=True`` is ``coalesce(1)``. It is safe only over a
+  frame that is already cached and materialized: the one task then
+  reads cached blocks, and no computation collapses onto it. The
+  consume job's slice sinks (``pipelines/consume_batch.py``,
+  ``run_slices_concurrent``) write this way, as filters of the
+  materialized slice-keyed cache. With all sinks at 16x (SCALE.md,
+  "Slice sinks at 16x") it did not lose to ``files=1`` on the same
+  cache.
 """
 
 from __future__ import annotations
@@ -29,10 +39,11 @@ def _shape_output(df: DataFrame, files: int | None, single_file: bool) -> DataFr
     if single_file:
         # Bit-parity escape hatch with the reference's coalesce(1)
         # (script/main.py:389): ONE output file whose row order matches
-        # a single-partition computation exactly. Scale hazard by
-        # design — coalesce(1) collapses the final stage onto one task
-        # — so it must be asked for explicitly; the default files= knob
-        # keeps upstream parallelism via repartition.
+        # a single-partition computation exactly. Over uncached input
+        # coalesce(1) collapses the final stage onto one task, so it
+        # must be asked for explicitly, and only over a materialized
+        # cache; the files= knob keeps upstream parallelism via
+        # repartition.
         if files not in (None, 1):
             raise ValueError("single_file=True contradicts files != 1")
         return df.coalesce(1)

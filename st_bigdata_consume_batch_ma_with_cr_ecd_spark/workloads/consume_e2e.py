@@ -3,8 +3,9 @@
 ``pipelines/consume_batch.py`` is pytest-golden-tested on hand-built
 fixtures, and ``pipeline_market_analytics`` oracle-checks an analogous
 chain over the star schema; this module hash-verifies and benchmarks
-the FAITHFUL job end to end: 4 slices, the staged stage-0 merge,
-modify_data, and all three sinks (reference ``script/main.py:300-416``).
+the FAITHFUL job end to end: the staged stage-0 merge, the four
+slices as one slice-keyed chain through modify_data, and all three
+sinks (reference ``script/main.py:300-416``).
 
 ``derive_consume_inputs`` builds the eight reference-shaped input
 tables deterministically from the ``events`` testdata table (pure
@@ -16,11 +17,12 @@ derivation AND the full pipeline in DuckDB, so the driver's value hash
 covers the whole job including the storage roundtrip.
 
 Scale notes: stage 0 is ONE scan+shuffle, staged once to parquet and
-scanned by all four slices; the texts side is a bucketed table, so
-slice joins against it skip its exchange; the slice loops multiply
-plan size, not shuffle count; both geo dims broadcast. The sinks are
-``files=1`` gzip per the reference's contract (bounded repartition,
-never ``coalesce(1)``).
+scanned in full once by the slice-keyed chain (the stage-3 stale-id
+subquery reads its key columns in a second, narrow scan); the texts
+side is a bucketed table, so the chain's join against it skips its
+exchange; both geo dims broadcast. The chain's result is cached once;
+each slice's single-file gzip CSV and JSON is a ``coalesce(1)`` of its
+filter of that cache, so only the write itself is one task.
 """
 
 from __future__ import annotations
@@ -496,10 +498,11 @@ def _e2e_oracle() -> str:
     oracle=_e2e_oracle(),
     doc="The faithful consume-batch job END TO END under one value hash: "
     "derived reference-shaped inputs run through the production job "
-    "(run_job, as the CLI runs it): stage-0 merge staged once to parquet "
-    "and shared by all 4 slices, texts staged as a bucketed table, "
-    "stages 1-3 + modify_data per slice, gzip CSV + gzip JSON sinks per "
-    "slice, dynamic-partition-overwrite parquet for the union, result "
+    "(run_job, as the CLI runs it): stage-0 merge staged once to parquet, "
+    "texts staged as a bucketed table, stages 1-3 + modify_data as one "
+    "chain keyed by the 4 country/distribution slices, gzip CSV + gzip "
+    "JSON sinks per slice, dynamic-partition-overwrite parquet for the "
+    "whole result, result "
     "read back FROM THE PARQUET SINK. Oracle replays the derivation and "
     "every stage in DuckDB (reference script/main.py:300-416).",
     tags=("bench", "eager"),

@@ -9,7 +9,10 @@ dedup, filtered-out distributions/estate types/geo prefixes,
 cleanupdataproblems threshold, visibility multiplicity + expiry +
 absence, fraud levels (pass / fail / missing / delete-op), nullable
 counters, price changes across the month boundary, geo lookup hit and
-miss, backslashed city names, non-integral room counts.
+miss, backslashed city names, non-integral room counts, a listing that
+switches RENT -> BUY on one day inside the window (it must stay in both
+slices), and an Austrian listing whose geo prefix ``10399`` is a key of
+the Bundesland lookup (it must never be geo-joined).
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from pyspark.sql import functions as F
 
 from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
     DEFAULT_SLICES,
+    DIST_COL,
+    GEO_COL,
     JobDates,
     SliceSpec,
     basedata_enrich,
@@ -148,6 +153,19 @@ def changelog_rows():
         R("r20", "2024-07-06", "2024-07-06 13:00:00", "G13", cid="C13", geo="99912345", buy=1.0),
         # delete with no donor -> dropped by the inner as-of join
         R("r21", "2024-07-04", "2024-07-04 12:00:00", "G14", op="Delete", cid=None),
+        # C15: RENT -> BUY on one day; per slice, the RENT row is that
+        # day's latest in RENT and the BUY row in BUY. Two current-month
+        # rents: RENT's price history keys on the rent, not the buy price.
+        # A pre-month row in each slice: each keeps its own previous record
+        R("r27", "2024-06-24", "2024-06-24 09:00:00", "G15", cid="C15", buy=240000.0),
+        R("r22", "2024-06-26", "2024-06-26 09:00:00", "G15", cid="C15", dist="RENT", rent=950.0),
+        R("r26", "2024-07-03", "2024-07-03 09:00:00", "G15", cid="C15", dist="RENT", rent=970.0),
+        R("r23", "2024-07-08", "2024-07-08 08:00:00", "G15", cid="C15", dist="RENT", rent=990.0),
+        R("r24", "2024-07-08", "2024-07-08 10:00:00", "G15", cid="C15", buy=250000.0),
+        # C16: Austria under the 10399 prefix, a Bundesland lookup key
+        # (10399 -> "BLX") that an Austrian row must never be joined to
+        R("r25", "2024-07-07", "2024-07-07 09:00:00", "G16", cid="C16", geo="10399123" + "45",
+          buy=350000.0),
     ]
 
 
@@ -174,6 +192,8 @@ def fixture_tables(spark):
             {"classifiedId": "C7", "aktivab": dt.date(2024, 5, 1), "aktivbis": dt.date(2024, 6, 15)},
             {"classifiedId": "C8", "aktivab": dt.date(2024, 6, 1), "aktivbis": dt.date(2024, 8, 1)},
             {"classifiedId": "C9", "aktivab": dt.date(2024, 6, 1), "aktivbis": dt.date(2024, 8, 1)},
+            {"classifiedId": "C15", "aktivab": dt.date(2024, 6, 1), "aktivbis": dt.date(2024, 8, 1)},
+            {"classifiedId": "C16", "aktivab": dt.date(2024, 6, 1), "aktivbis": dt.date(2024, 8, 1)},
         ]
     )
     fraud_pd = pd.DataFrame(
@@ -186,6 +206,8 @@ def fixture_tables(spark):
             {"globalObjectKey": "C4", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 2},
             {"globalObjectKey": "C8", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 0},
             {"globalObjectKey": "C9", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 0},
+            {"globalObjectKey": "C15", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 0},
+            {"globalObjectKey": "C16", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": -1},
         ]
     )
     contacts_pd = pd.DataFrame(
@@ -387,13 +409,26 @@ def canon(rows, cols):
 # ---------------------------------------------------------------- golden tests
 
 
+def keyed_final(t):
+    """Stages 0-3 over the fixtures: one slice-keyed chain for all four
+    slices."""
+    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
+    first = basedata_first(merged, t["texts"])
+    base = basedata_enrich(first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES)
+    return basedata_final(base, first, DATES)
+
+
+def slice_of(df, spec):
+    """One (geoid, distribution) slice of a slice-keyed stage output."""
+    return df.where(
+        F.col(GEO_COL).startswith(str(spec.geoid)) & (F.col(DIST_COL) == spec.distribution_type)
+    )
+
+
 @pytest.mark.parametrize("spec", DEFAULT_SLICES, ids=lambda s: f"{s.geoid}-{s.distribution_type}")
 def test_slice_matches_independent_duckdb_formulation(spark, fixture_tables, spec):
     con, t = fixture_tables
-    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
-    first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
-    base = basedata_enrich(first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES)
-    final = basedata_final(base, first, DATES, spec.price_amount_column)
+    final = slice_of(keyed_final(t), spec)
 
     res = con.execute(slice_oracle(str(spec.geoid), spec.distribution_type, spec.price_amount_column))
     d_cols = [d[0] for d in res.description]
@@ -408,12 +443,8 @@ def test_slice_matches_independent_duckdb_formulation(spark, fixture_tables, spe
 
 def test_expected_listing_level_outcomes(spark, fixture_tables):
     con, t = fixture_tables
-    spec = SliceSpec(108, "BUY")
-    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
-    first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
-    base = basedata_enrich(first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES)
-    final = basedata_final(base, first, DATES, spec.price_amount_column)
-    rows = final.collect()
+    keyed = keyed_final(t)
+    rows = slice_of(keyed, SliceSpec(108, "BUY")).collect()
     by_cid = {}
     for r in rows:
         by_cid.setdefault(r.classified_metaData_classifiedId, []).append(r)
@@ -439,16 +470,19 @@ def test_expected_listing_level_outcomes(spark, fixture_tables):
     assert r.userDefined_immoWelt_contact_requests == 5
     assert r.userDefined_immoWelt_iw_contact_requests == 2
     assert r.userDefined_immoWelt_expose_visits == 10
+    # C15 switched RENT -> BUY on 2024-07-08: each slice keeps its own
+    # latest row of that day, its own pre-month row, and RENT one row per
+    # current-month rent
+    assert sorted(r.id for r in by_cid["C15"]) == ["r24", "r27"]
+    rent = slice_of(keyed, SliceSpec(108, "RENT")).where(
+        F.col("classified_metaData_classifiedId") == "C15"
+    )
+    assert sorted(r.id for r in rent.collect()) == ["r22", "r23", "r26"]
 
 
 def test_modify_data_output_shape(spark, fixture_tables):
     con, t = fixture_tables
-    spec = SliceSpec(108, "BUY")
-    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
-    first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
-    base = basedata_enrich(first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES)
-    final = basedata_final(base, first, DATES, spec.price_amount_column)
-    out = modify_data(final, 108, DATES.partition_month, t["bundeslaender"], t["stadtlandkreise"])
+    out = modify_data(keyed_final(t), DATES.partition_month, t["bundeslaender"], t["stadtlandkreise"])
 
     rows = {r.classified_metaData_classifiedId: r for r in out.collect()}
     r = rows["C1"]
@@ -458,10 +492,11 @@ def test_modify_data_output_shape(spark, fixture_tables):
     assert r.partitionGeoid == 108 and r.partitionMonth == "2024-07"
     assert "classified_geo_countrySpecific_de_iwtLegacyGeoID" not in out.columns
     assert not any(c.startswith("cleaned_") for c in out.columns)
-    # AT slice gets literal-null geo columns
-    at = modify_data(final.limit(1), 103, DATES.partition_month, t["bundeslaender"], t["stadtlandkreise"])
-    at_row = at.collect()
-    assert all(x.geo_state is None for x in at_row)
+    # AT rows get NULL geo columns, even C16 whose 10399 prefix is a
+    # Bundesland lookup key
+    at = rows["C16"]
+    assert at.partitionGeoid == 103 and at.classified_distributionType == "BUY"
+    assert at.geo_state is None and at.geo_userDefined_immoWelt_county is None
 
 
 def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables, tmp_path):
@@ -555,17 +590,36 @@ def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path, caps
 
 
 def test_run_job_releases_its_blocks(spark, fixture_tables, tmp_path):
-    """run_job unpersists its slice caches and releases the dims'
-    localCheckpoint blocks once the parquet sink is written."""
+    """run_job unpersists its result cache and releases the dims'
+    localCheckpoint blocks once the parquet sink is written, and
+    releases no block it did not pin: neither an RDD-level
+    localCheckpoint block nor a SQL-cache entry made before it."""
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import run_job
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.streaming.sinks import (
         persistent_rdd_ids,
+        release_new_persistent_rdds,
     )
 
     _, t = fixture_tables
-    before = persistent_rdd_ids(spark)
-    counts = run_job(t, DATES, str(tmp_path))
-    assert persistent_rdd_ids(spark) == before
+    outer = persistent_rdd_ids(spark)
+    held_ckpt = spark.range(3).localCheckpoint(eager=True)
+    held_cache = spark.range(5).cache()
+    held_cache.count()
+    # Hold every persisted RDD strongly for the whole check. Spark's
+    # ContextCleaner unpersists an RDD once the JVM garbage-collects it,
+    # so blocks that earlier tests left unreferenced would otherwise
+    # vanish from the set below whenever a GC happens to run meanwhile.
+    pinned = spark.sparkContext._jsc.getPersistentRDDs()
+    before = set(pinned.keySet())
+    try:
+        counts = run_job(t, DATES, str(tmp_path))
+        assert persistent_rdd_ids(spark) == before
+        assert held_cache.storageLevel.useMemory  # its SQL-cache entry survives
+        assert held_ckpt.count() == 3 and held_cache.count() == 5
+    finally:
+        held_cache.unpersist()
+        release_new_persistent_rdds(spark, outer)
+        del pinned
     assert sum(counts.values()) == spark.read.parquet(str(tmp_path / "parquet")).count() > 0
 
 
@@ -583,7 +637,7 @@ def test_e2e_slices_reuse_cached_merge(spark):
     merged = merge_delete(filter_changelog(t["changelog"]), _DATES.first_day_past).cache()
     try:
         merged.count()
-        first = basedata_first(merged, t["texts"], 108, "BUY")
+        first = basedata_first(merged, t["texts"])
         plan = first._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
         # and the merge's own operators are NOT re-planned above the cache
@@ -592,13 +646,73 @@ def test_e2e_slices_reuse_cached_merge(spark):
         merged.unpersist()
 
 
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending into adaptive
+    plans and query stages; a reused exchange is a leaf, so a shared
+    subtree is listed once."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+    for k in kids:
+        yield from _plan_nodes(k)
+
+
+def _output_names(node):
+    out = node.output()
+    return [out.apply(i).name() for i in range(out.size())]
+
+
+#: what the stale-id subquery of stage 3 reads of the staged stage 0: the
+#: slice key, the listing id and its change time, stage 1's order keys
+STALE_ID_INPUT = {
+    "id", "partitionChangeDate", "classified_metaData_classifiedId",
+    "classified_metaData_changeDate", GEO_COL, DIST_COL, "cleanupdataproblems",
+}
+
+
+def test_consume_batch_plan_contract(spark, fixture_tables, tmp_path):
+    """The slice-keyed chain reads the staged stage-0 payload ONCE for
+    all four slices, and merge_delete's as-of pick ranks donor keys, not
+    donor payloads."""
+    _, t = fixture_tables
+    keyed = consume_batch(t, DATES, str(tmp_path))
+    keyed.collect()
+    scans = [
+        n for n in _plan_nodes(keyed._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and n.relation().location().rootPaths().head().toString().endswith("/_stage0_staging")
+    ]
+    wide = [s for s in scans if not set(_output_names(s)) <= STALE_ID_INPUT]
+    assert len(wide) == 1
+    # besides it, at most the stale-id subquery's key-column scan: the
+    # NOT IN is a self-join, and column pruning gives its side its own scan
+    assert len(scans) <= 2
+
+    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
+    merged.collect()
+    windows = [
+        n for n in _plan_nodes(merged._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "WindowExec"
+    ]
+    assert windows
+    for w in windows:
+        assert not [
+            c for c in _output_names(w.child()) if c.startswith(("classified_", "cleaned_"))
+        ]
+
+
 def test_enrich_prepared_dims_equals_inline(spark, fixture_tables):
-    """r13 §2.4: the 4-slice loop shares ONE set of slice-independent
-    enrichment inputs (prepare_enrich_dims) instead of re-deriving the
-    visibility filter / fraud argmax / counter summaries per slice.
+    """r13 §2.4: the job enriches with ONE prepared set of
+    slice-independent inputs (prepare_enrich_dims) instead of deriving
+    the visibility filter / fraud argmax / counter summaries inline.
     The prepared path — including the materialized (localCheckpoint)
-    form run_slices_concurrent uses — must be row-identical to the
-    inline default for every slice."""
+    form stage_prep builds — must be row-identical to the inline
+    default over all slices."""
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
         prepare_enrich_dims,
     )
@@ -610,14 +724,17 @@ def test_enrich_prepared_dims_equals_inline(spark, fixture_tables):
     )
     ckpt = {k: v.localCheckpoint(eager=True) for k, v in dims.items()}
     canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
-    for spec in DEFAULT_SLICES:
-        first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
-        inline = basedata_enrich(
-            first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES
-        )
-        prepared = basedata_enrich(
-            first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES,
-            dims=ckpt,
-        )
-        assert prepared.columns == inline.columns
-        assert canon(prepared) == canon(inline)
+    first = basedata_first(merged, t["texts"])
+    inline = basedata_enrich(
+        first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES
+    )
+    prepared = basedata_enrich(
+        first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES,
+        dims=ckpt,
+    )
+    assert prepared.columns == inline.columns
+    assert canon(prepared) == canon(inline)
+    # every slice is present, so no slice is compared empty
+    assert {(r[GEO_COL][:3], r[DIST_COL]) for r in inline.collect()} == {
+        (str(s.geoid), s.distribution_type) for s in DEFAULT_SLICES
+    }

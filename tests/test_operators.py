@@ -159,6 +159,17 @@ def test_not_in_empty_subquery_keeps_everything(spark):
     assert rows_set(not_in_anti_join(left, right, "k")) == {(1,), (2,)}
 
 
+def test_not_in_within_scopes_the_subquery(spark):
+    # one NOT IN per scope: a key excludes only inside its own scope, and
+    # a NULL key empties only its own scope
+    left = spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", 1), ("b", 2), ("c", 1), ("c", None)], "s string, k int"
+    )
+    right = spark.createDataFrame([("a", 1), ("b", None)], "s string, k int")
+    out = not_in_anti_join(left, right, "k", within=["s"])
+    assert rows_set(out) == {("a", 2), ("c", 1)}
+
+
 # ---------------------------------------------------------------- set ops
 
 

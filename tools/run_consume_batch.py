@@ -1,9 +1,10 @@
 """Job driver CLI — the open-Spark equivalent of the reference's Glue
 entry point (``script/main.py:196-416``): resolve the incremental
 window, read the eight input tables and run the nightly job
-(``pipelines.consume_batch.run_job``), which writes the reference's
-three sinks (gzip JSON nested, gzip CSV flat, month-partitioned
-parquet) under ``--output-dir``.
+(``pipelines.consume_batch.run_job``), which computes all four
+country/distribution slices as one slice-keyed chain and writes the
+reference's three sinks (gzip JSON nested and gzip CSV flat, one
+directory per slice; month-partitioned parquet) under ``--output-dir``.
 
     python tools/run_consume_batch.py \
         --input-dir /data/inputs --output-dir /data/out \
@@ -53,6 +54,8 @@ INPUT_TABLES = (
 
 
 def main(argv: list[str] | None = None) -> int:
+    from concurrent.futures import ThreadPoolExecutor
+
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input-dir", required=True)
     ap.add_argument("--output-dir", required=True)
@@ -62,7 +65,12 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     spark = get_spark("consume-batch-job", cpus=args.cpus)
-    t = {name: spark.read.parquet(f"{args.input_dir}/{name}") for name in INPUT_TABLES}
+    # each read runs a one-task schema job; the pool overlaps them
+    with ThreadPoolExecutor(max_workers=len(INPUT_TABLES)) as pool:
+        frames = pool.map(
+            lambda name: spark.read.parquet(f"{args.input_dir}/{name}"), INPUT_TABLES
+        )
+        t = dict(zip(INPUT_TABLES, frames))
     days: int | str = args.days_ago if args.days_ago == "full_refresh" else int(args.days_ago)
     dates = JobDates.resolve(date.fromisoformat(args.partition_date), days)
 

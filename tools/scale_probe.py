@@ -191,10 +191,10 @@ def probes(
         (F.col("n_triangles") * 8).alias("est_triangles")
     )
 
-    # consume-batch e2e COMPUTE (derive + stage-0 merge + 4 slice
-    # chains + union), sinks excluded: the gzip files=1 sinks are the
-    # reference's fixed output contract (serial by design) and would
-    # only measure gzip throughput here.
+    # consume-batch e2e COMPUTE (derive + stage-0 merge + the
+    # slice-keyed chain), sinks excluded: the single-file gzip sinks are
+    # the reference's fixed output contract (one file per slice) and
+    # would mostly measure gzip throughput here.
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
         consume_batch,
     )
@@ -212,7 +212,7 @@ def probes(
 
     def e2e_compute() -> None:
         # the job's prep (stage 0 staged to parquet, bucketed texts, dim
-        # checkpoints) then the lazy 4-slice union into the noop sink
+        # checkpoints) then the lazy slice-keyed chain into the noop sink
         staging = os.path.join(tempfile.gettempdir(), "spark_graft_probe_consume")
         shutil.rmtree(staging, ignore_errors=True)
         try:
